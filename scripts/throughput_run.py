@@ -1,6 +1,7 @@
-"""Run-stage throughput: one wire file consumed through the custom
-``entity_changes`` streaming source -> staged log -> final-blocks order
-check -> single-pass demux to bundled JSONL -> POI digest chain + CSVs +
+"""Run-stage throughput: one wire file staged by the JVM-native batch read
+(``streaming.ingest.read_wire``: text scan, line-number ``seq``, regex
+``block_num``) -> staged parquet log -> final-blocks order check ->
+single-pass demux to bundled JSONL -> POI digest chain + CSVs +
 last_block marker.  The ``run`` analogue of scripts/throughput_tocsv.py,
 on the same lineitem-derived fixture, so the two numbers are comparable.
 

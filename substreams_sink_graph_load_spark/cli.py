@@ -13,10 +13,12 @@ A reference user maps each command 1:1:
     python -m substreams_sink_graph_load_spark drop-index <sgdN> <schema.graphql> <tbl:idx,...>
     python -m substreams_sink_graph_load_spark create-index <ddl-file>
 
-SQL-emitting commands print their statements (pipe to psql); data commands
-run Spark jobs.  No gRPC endpoint exists in this environment, so ``run``
-consumes the wire-file stand-in via the custom streaming DataSource — the
-cursor/resume/bundling behavior is the real path (sources/stream_source.py).
+SQL-emitting commands print their statements (pipe to psql); ``run`` and
+``tocsv`` run Spark jobs; ``inject-csv`` runs COPY from a driver-side
+connection pool and starts no Spark.  ``run`` reads a finished wire file
+(the stand-in for the reference's gRPC stream) with one batch read
+(streaming/ingest.py); the Python streaming source in
+sources/stream_source.py is the seam where a live stream would plug in.
 """
 
 from __future__ import annotations
@@ -49,7 +51,7 @@ def main(argv: list[str] | None = None) -> int:
     sp.add_argument("--start-poi", default=None,
                     help="hex POI digest of the last block before --start-block")
     sp.add_argument("--working-dir", default=None,
-                    help="local staging directory (default: temp dir)")
+                    help="local staging directory (default: <dest>/_work_ingest)")
 
     sp = sub.add_parser("tocsv", help="bundled JSONL -> versioned CSV bundles")
     sp.add_argument("src"), sp.add_argument("dest"), sp.add_argument("entity")
@@ -242,6 +244,7 @@ def main(argv: list[str] | None = None) -> int:
                 start_poi=start_poi,
                 first_block=first_block,
                 workdir=args.working_dir,
+                progress=rep,
             )
         finally:
             rep.stop(
@@ -308,9 +311,8 @@ def main(argv: list[str] | None = None) -> int:
             for f in files:
                 print(f"\\copy: {f}\n{stmt};")
             return 0
-        spark = _spark()
         n = inject_csv_files(
-            spark, files, args.dsn, args.pg_schema, args.entity, desc
+            None, files, args.dsn, args.pg_schema, args.entity, desc
         )
         print(f"injected {n} files")
         return 0

@@ -335,9 +335,9 @@ def poi_block_states_sorted(
     runs: list[tuple[int, int, int, int]] | None = None,
 ) -> list[tuple[int, bytes, int]] | None:
     """SHUFFLE-FREE per-block paused POI states for physically seq-sorted
-    logs (the ``run`` stage's staged parquet: micro-batches append in
-    cursor order, so every scan split holds contiguous slices of the
-    global (block, seq) order).
+    logs (the ``run`` stage's staged parquet: each file is one scan split
+    of the wire in line order, so every scan split holds contiguous
+    slices of the global (block, seq) order).
 
     Two scans, zero shuffles of the log:
 
@@ -462,15 +462,24 @@ def poi_chain(
             (r["block_num"], bytes(r["state"]))
             for r in poi_block_states(raw).collect()
         ]
+    import pyarrow as pa
+
     chained = chain_block_states(states, start=start_poi)
-    rows = []
+    blocks, digests = [], []
     prev = start_poi
     for block, digest in chained:
         if digest != prev:
-            rows.append((block, chain_id, digest.hex()))
+            blocks.append(block)
+            digests.append(digest.hex())
         prev = digest
+    # an Arrow table becomes a LocalRelation: no pickled RDD, no worker
     return spark.createDataFrame(
-        rows or [], "block_num long, id string, digest string"
+        pa.table({
+            "block_num": pa.array(blocks, pa.int64()),
+            "id": pa.array([chain_id] * len(blocks), pa.string()),
+            "digest": pa.array(digests, pa.string()),
+        }),
+        "block_num long, id string, digest string",
     )
 
 

@@ -1,17 +1,18 @@
 """Postgres bulk-load sink: the reference's ``inject-csv`` command
-(ref cmd/substreams-sink-graph-load/inject_csv.go) as a partition-wise
-COPY executor.
+(ref cmd/substreams-sink-graph-load/inject_csv.go) as a pooled COPY
+executor.
 
 The headline trick IS the reference's headline trick: ``COPY ... FROM STDIN
 WITH (FORMAT CSV, HEADER, FORCE_NOT_NULL (...))`` per bundled file
-(inject_csv.go:278-289) — 10-100x over row INSERTs.  Spark's role is
-parallelism and placement: files distribute over executors with
-``foreachPartition``, each partition holding one pooled connection
-(inject_csv.go:78 uses 2-3; one per task here).
+(inject_csv.go:278-289) — 10-100x over row INSERTs.  The files split into
+contiguous batches, one per pooled connection, and a driver thread pool
+runs the batches — the reference's own connection-pool shape
+(inject_csv.go:78).  COPY is I/O the server does; no Spark job or Python
+worker is needed to drive it, so ``inject-csv`` starts no JVM.
 
-Two wire backends, picked per task at runtime:
+Two wire backends, picked per batch at runtime:
 
-* ``psycopg`` when importable — one pooled connection per partition,
+* ``psycopg`` when importable — one connection per batch,
   ``cursor.copy()`` streaming (the reference's pgx CopyFrom analogue);
 * the ``psql`` CLI otherwise — ``psql <conninfo> -c 'COPY ... FROM STDIN'``
   with the file on stdin.  libpq does the exact same protocol either way,
@@ -35,6 +36,7 @@ import re
 import shutil
 import subprocess
 from collections.abc import Sequence
+from concurrent.futures import ThreadPoolExecutor
 
 from ..schema.entities import EntityDesc
 
@@ -187,30 +189,28 @@ def inject_csv_files(
     desc: EntityDesc,
     pool_conns: int = 3,
 ):
-    """Distribute COPY-per-file over executors.
+    """COPY every file, over at most ``pool_conns`` connections.
 
-    Each task opens one connection and streams its files through
-    ``copy_expert`` — the partition-wise analogue of running N inject
-    processes (reference README.md:83-87 parallelizes per entity; we
-    parallelize per file batch as well).
+    The files split into contiguous batches, one per connection, and each
+    batch streams its files over its one connection from a driver thread —
+    the reference's connection pool (inject_csv.go:78; README.md:83-87
+    runs one such process per entity).  ``spark`` is unused (COPY needs no
+    Spark job) and may be None.  Returns the number of files loaded.
     """
     if not files:
         return 0
     from .dsn import expand_dsn
 
-    # expand on the DRIVER: executors need not carry the secret env vars,
-    # and a ${ENV}-form DSN reaches every COPY task already resolved
     dsn = expand_dsn(dsn)
     columns = validate_csv_header(files[0], desc)
     fnn = force_not_null_columns(desc)
     copy_sql = build_copy_sql(pg_schema, table, columns, fnn)
 
-    def load_partition(paths):
+    def load_batch(paths: Sequence[str]) -> int:
         try:
             import psycopg
         except ImportError:
             psycopg = None
-        n = 0
         if psycopg is not None:  # pragma: no cover - psycopg not in CI image
             with psycopg.connect(dsn) as conn:
                 for p in paths:
@@ -218,17 +218,18 @@ def inject_csv_files(
                         with cur.copy(copy_sql) as cp:
                             while chunk := fh.read(1 << 20):
                                 cp.write(chunk)
-                    n += 1
                 conn.commit()
-            return [n]
+            return len(paths)
         if shutil.which("psql") is None:  # pragma: no cover
             raise NotImplementedError(
                 "psycopg not installed and psql not on PATH; install either "
                 "to inject, or run the generated COPY statements manually"
             )
-        paths = list(paths)
         _psql_copy_many(dsn, copy_sql, paths)
-        return [len(paths)]
+        return len(paths)
 
-    rdd = spark.sparkContext.parallelize(list(files), min(pool_conns, len(files)))
-    return sum(rdd.mapPartitions(load_partition).collect())
+    files = list(files)
+    k = max(1, min(pool_conns, len(files)))
+    batches = [files[i * len(files) // k : (i + 1) * len(files) // k] for i in range(k)]
+    with ThreadPoolExecutor(max_workers=k) as pool:
+        return sum(pool.map(load_batch, batches))

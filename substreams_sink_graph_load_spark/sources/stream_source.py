@@ -12,8 +12,13 @@ library keeps the cursor).  The transport here is a growing local JSONL
 - the source is replayable from any committed offset (gRPC reconnect +
   cursor replay in the reference).
 
-A production deployment swaps ``_read_lines`` for a gRPC client; nothing
-else changes.
+Not on ``run``'s path: ``run`` consumes a finished wire file, data at
+rest, with the JVM-native batch read ``streaming.ingest.read_wire``,
+which starts no Python process.  This reader is (a) the reference that
+read is differential-tested against — the same (block_num, seq, value)
+rows — and (b) the seam where a live source plugs in: a deployment that
+tails a real stream swaps the file reads in ``read`` for a gRPC client
+and stages its micro-batches from ``foreachBatch``.
 
 Register + use::
 
@@ -88,7 +93,8 @@ class _LineRange(InputPartition):
 
 
 # last member of the wire object (types.go:3-9 field order); RE2-compatible
-# (pc.extract_regex requires named groups)
+# (pc.extract_regex requires named groups).  streaming.ingest.read_wire runs
+# the same pattern in Java regex, spelling the group (?<b>...)
 _BLOCK_RE = r'"block_num"\s*:\s*(?P<b>-?\d+)\s*\}\s*$'
 
 

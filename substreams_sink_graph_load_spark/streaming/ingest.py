@@ -1,14 +1,20 @@
-"""Wire-stream ingest: the reference's ``graphload run`` JSONL stage
+"""Wire ingest: the reference's ``graphload run`` JSONL stage
 (SURVEY §3.1) — demultiplex an interleaved entity-change stream into
 per-entity bundled JSONL files, compute the POI chain over the SAME
 interleaved order, and write ``last_block.txt``.
 
-Shape: the wire stream (custom DataSource or any (block_num, seq, value)
-stream) stages to a parquet log per microbatch (cheap append, cursor
-checkpointed by Spark); finalize() then cuts the bundle files in one batch
-job — entity routing is ONE repartition on (entity, bundle_start) feeding a
-single two-level ``partitionBy`` text write (every entity x bundle lands in
-its own directory in one pass; no per-entity rescans), POI is the §2.5
+Shape: a finished wire file is data at rest, so ``run`` stages it with one
+JVM-native batch read (:func:`read_wire`: ``spark.read.text`` plus
+``seq`` = 0-based line number and ``block_num`` = the wire reader's
+regex with a ``get_json_object`` fallback) into a parquet log, rewritten
+whole on every run — a re-run over a grown wire equals a fresh run, so no
+cursor checkpoint is kept.  No Python process starts for staging; the
+Python streaming source (``sources.stream_source``) is the reference
+:func:`read_wire` is tested against and the seam where a live source
+plugs in.  The bundle files are then cut in one batch job — entity
+routing is ONE repartition on (entity, bundle_start) feeding a single
+two-level ``partitionBy`` text write (every entity x bundle lands in its
+own directory in one pass; no per-entity rescans), POI is the §2.5
 parallel fold.  The reference materializes bundles as the stream crosses
 boundaries; the observable contract (file set, names, contents, order,
 empty bundles, poi2$ rows, last_block marker) is identical.
@@ -21,21 +27,77 @@ import os
 import shutil
 import urllib.parse
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.bundles import boundaries, bundle_filename, bundle_start_col
 from ..schema.normalize import normalize_field
+from .stats import ProgressReporter
+
+
+def read_wire(spark: SparkSession, wire_path: str) -> DataFrame:
+    """The wire file as a (block_num, seq, value) frame, read natively.
+
+    Same rows as the Python stream reader
+    (``EntityChangesStreamReader.read``) over the whole file: ``seq`` is
+    the 0-based line number (blank lines counted, then skipped, a last
+    line without a newline included), ``block_num`` comes from the same
+    ``_BLOCK_RE`` pattern with a ``get_json_object`` fallback, and is -1
+    for a line neither can parse.
+
+    Line numbers need each scan split's line count: one aggregation over
+    the file (one row per split) gives every split its first line number,
+    and ``seq`` is then the split's base plus the row's position in its
+    partition (``monotonically_increasing_id`` counts rows per partition,
+    and a split's rows are contiguous there).  Both reads share the
+    frame's file listing, so they plan the same splits and the bases
+    apply to the frame returned.
+    """
+    from ..sources.stream_source import _BLOCK_RE
+
+    lines = spark.read.text(wire_path, lineSep="\n").select(
+        F.input_file_block_start().alias("_split"),
+        F.monotonically_increasing_id().alias("_row"),
+        "value",
+    )
+    base = 0
+    shift: dict[int, int] = {}
+    for r in sorted(
+        lines.groupBy("_split")
+        .agg(F.count(F.lit(1)).alias("n"), F.min("_row").alias("first"))
+        .collect()
+    ):
+        shift[r["_split"]] = base - r["first"]
+        base += r["n"]
+    if len(shift) > 1:
+        offset = F.create_map(
+            *[F.lit(x).cast("long") for kv in shift.items() for x in kv]
+        )[F.col("_split")]
+    else:
+        offset = F.lit(next(iter(shift.values()), 0))
+    # Python's (?P<name>...) group is (?<name>...) in Java regex
+    hit = F.regexp_extract("value", _BLOCK_RE.replace("(?P<", "(?<"), 1)
+    block = F.coalesce(
+        hit.try_cast("long"),  # no match is "", which casts to null
+        F.get_json_object("value", "$.block_num").try_cast("long"),
+        F.lit(-1).cast("long"),
+    )
+    return lines.where(F.col("value") != "").select(
+        block.alias("block_num"),
+        (F.col("_row") + offset).alias("seq"),
+        "value",
+    )
 
 
 class WireIngest:
-    """foreachBatch stager + finalizer for the wire stream."""
+    """Stager of the wire frame into ``<workdir>/wire_log``."""
 
     def __init__(self, spark: SparkSession, workdir: str, stop_block: int):
         self.spark = spark
         self.workdir = workdir
         self.stop_block = stop_block
         self.staged = os.path.join(workdir, "wire_log")
+        self.rows = 0  # rows staged by the last process_batch
         os.makedirs(workdir, exist_ok=True)
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -43,16 +105,20 @@ class WireIngest:
         # write (JVM get_json_object in the same task that writes the
         # row) — every downstream pass (router validation, demux write)
         # then reads a pruned parquet column instead of re-parsing 100%
-        # of the line bytes per pass
+        # of the line bytes per pass.  The row count rides the write as
+        # an observed metric: no extra scan.
+        seen = Observation("wire_stage")
         (
             batch_df.where(F.col("block_num") < self.stop_block)
             .withColumn(
                 "entity_raw",
                 F.get_json_object("value", "$.entity_change.entity"),
             )
-            .write.mode("append")
+            .observe(seen, F.count(F.lit(1)).alias("rows"))
+            .write.mode("overwrite")
             .parquet(self.staged)
         )
+        self.rows = seen.get["rows"]
 
     def staged_df(self) -> DataFrame:
         return self.spark.read.parquet(self.staged)
@@ -352,22 +418,23 @@ def run_ingest(
     dest_dir: str,
     entities: list[str],
     stop_block: int,
-    wire_path: str | None = None,
-    stream_df: DataFrame | None = None,
+    wire_path: str,
     bundle_size: int = 1000,
     chain_id: str | None = None,
     start_poi: bytes | None = None,
     workdir: str | None = None,
     enforce_order: bool = True,
     first_block: int = 0,
+    progress: ProgressReporter | None = None,
 ) -> dict[str, list[str]]:
-    """Full ``run`` parity: wire stream -> per-entity JSONL bundles
+    """Full ``run`` parity: wire file -> per-entity JSONL bundles
     (+ optional poi2$ CSV chain over the interleaved order) +
     ``last_block.txt``.
 
-    Source: either ``wire_path`` (consumed via the custom
-    ``entity_changes`` DataSource, cursor-checkpointed) or a prepared
-    ``stream_df`` with (block_num, seq, value).
+    The wire stages with :func:`read_wire` into ``<workdir>/wire_log``
+    (default workdir ``<dest>/_work_ingest``), replacing any earlier
+    staging: a re-run over a grown wire writes what a fresh run would.
+    ``progress`` is told of the staged rows as one batch.
 
     ``enforce_order`` reproduces the reference's source contract: block
     numbers must be non-decreasing in cursor order — an undo/reorg signal
@@ -378,27 +445,11 @@ def run_ingest(
     its aligned bundle (the reference's bundlers boot at the start block,
     not 0).
     """
-    from ..sources.stream_source import EntityChangesDataSource
-
     workdir = workdir or os.path.join(dest_dir, "_work_ingest")
     ingest = WireIngest(spark, workdir, stop_block)
-
-    if stream_df is None:
-        if wire_path is None:
-            raise ValueError("need wire_path or stream_df")
-        spark.dataSource.register(EntityChangesDataSource)
-        stream_df = (
-            spark.readStream.format("entity_changes")
-            .option("path", wire_path)
-            .load()
-        )
-    query = (
-        stream_df.writeStream.foreachBatch(ingest.process_batch)
-        .option("checkpointLocation", os.path.join(workdir, "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    ingest.process_batch(read_wire(spark, wire_path), 0)
+    if progress is not None:
+        progress.record_batch(ingest.rows)
 
     staged = ingest.staged_df()
     last: int | None = None
@@ -430,8 +481,8 @@ def run_ingest(
     if chain_id is not None:
         from ..operators.poi import RUNS_UNAVAILABLE, poi_tocsv
 
-        # The staged log is written in cursor order (micro-batch appends),
-        # so the shuffle-free POI fold applies; it validates the
+        # The staged log is written in cursor order (one split per file,
+        # each in line order), so the shuffle-free POI fold applies; it validates the
         # assumption and falls back to the shuffle path on any mismatch.
         # Discovery ALWAYS ran above when chain_id is set, so runs=None
         # here means it exceeded its bound — tell the fold so it goes

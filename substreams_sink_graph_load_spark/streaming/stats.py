@@ -8,12 +8,13 @@ on the Spark UI for task-level detail; this module adds the same
 at-a-glance heartbeat to ``run`` / ``tocsv`` so a terminal user sees
 liveness and rate without opening the UI.
 
-Driver-side only, pull-based, zero cost to the job itself: a daemon
-thread samples (a) every active streaming query's ``recentProgress``
-(deduplicated by ``(runId, batchId)``, so cumulative event counts are
-exact as long as the poll interval outpaces ~100 batches — far beyond
-the bundled-file triggers used here) and (b) the status tracker's
-active-stage task counts for batch jobs.
+Driver-side only, zero cost to the job itself: a daemon thread samples
+(a) every active streaming query's ``recentProgress`` (deduplicated by
+``(runId, batchId)``, so cumulative event counts are exact as long as the
+poll interval outpaces ~100 batches) and (b) the status tracker's
+active-stage task counts for batch jobs.  A batch stage that counts its
+own rows (``run``'s wire staging, via ``DataFrame.observe``) reports them
+with :meth:`ProgressReporter.record_batch`.
 """
 
 from __future__ import annotations
@@ -62,6 +63,12 @@ class ProgressReporter:
         """Track a query explicitly (exact counts even if it finishes
         between polls)."""
         self._queries[query.id] = query
+
+    def record_batch(self, rows: int) -> None:
+        """Count one batch of ``rows`` events processed outside any
+        streaming query."""
+        self._events += int(rows)
+        self._batches += 1
 
     def _sample_streams(self) -> None:
         try:

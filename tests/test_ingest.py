@@ -1,4 +1,4 @@
-"""Full `run` parity: interleaved wire stream -> custom DataSource ->
+"""Full `run` parity: interleaved wire stream -> native staging read ->
 demuxed per-entity JSONL bundles (+ poi2$ chain + last_block.txt) ->
 tocsv -> CSVs identical to the batch pipeline over hand-laid JSONL."""
 
@@ -9,7 +9,7 @@ import pytest
 
 from test_pipeline_e2e import ACCOUNT_EVENTS, TRANSFER_EVENTS, SDL, read_csv
 
-from substreams_sink_graph_load_spark.streaming.ingest import run_ingest
+from substreams_sink_graph_load_spark.streaming.ingest import read_wire, run_ingest
 from substreams_sink_graph_load_spark.tocsv import tocsv
 
 
@@ -203,13 +203,30 @@ def test_undo_detected_across_chunk_boundary(spark):
     check_final_blocks_only(ok, chunk_width=2)
 
 
-def test_stream_reader_junk_line_fallback(tmp_path):
-    """A line the fast RE2 pattern can't parse falls back to the exact
-    Python extractor: reordered members still parse, junk yields -1."""
+def _reader_rows(wire_path):
+    """(block_num, seq, value) rows of the Python stream reader over the
+    whole wire file, in cursor order."""
     from substreams_sink_graph_load_spark.sources.stream_source import (
         EntityChangesStreamReader,
     )
 
+    r = EntityChangesStreamReader({"path": str(wire_path)})
+    rows = []
+    for p in r.partitions(r.initialOffset(), r.latestOffset()):
+        for batch in r.read(p):
+            rows.extend(zip(*[c.to_pylist() for c in batch.columns]))
+    return rows
+
+
+def _native_rows(spark, wire_path):
+    rows = read_wire(spark, str(wire_path)).collect()
+    return sorted((tuple(r) for r in rows), key=lambda r: r[1])
+
+
+def test_stream_reader_junk_line_fallback(spark, tmp_path):
+    """A line the fast RE2 pattern can't parse falls back to the exact
+    Python extractor: reordered members still parse, junk yields -1.
+    The native staging read (read_wire) returns the same rows."""
     wire = tmp_path / "wire.jsonl"
     wire.write_text(
         '{"entity_change": {}, "block_num": 5}\n'
@@ -217,15 +234,65 @@ def test_stream_reader_junk_line_fallback(tmp_path):
         "not json at all\n"
         "\n"  # empty line: skipped, but seq advances
         '{"entity_change": {}, "block_num": 7}\n'
+        '{"entity_change": {}, "block_num": 8}'  # no trailing newline
     )
-    r = EntityChangesStreamReader({"path": str(wire)})
-    assert r.latestOffset() == {"line": 5}
-    parts = r.partitions({"line": 0}, {"line": 5})
-    rows = []
-    for p in parts:
-        for batch in r.read(p):
-            rows.extend(zip(*[c.to_pylist() for c in batch.columns]))
-    assert [(b, s) for b, s, _v in rows] == [(5, 0), (6, 1), (-1, 2), (7, 4)]
+    rows = _reader_rows(wire)
+    assert [(b, s) for b, s, _v in rows] == [
+        (5, 0), (6, 1), (-1, 2), (7, 4), (8, 5)
+    ]
+    assert _native_rows(spark, wire) == rows
+
+
+def test_native_staging_matches_stream_reader(spark, wire):
+    """read_wire over the e2e wire equals the Python stream reader, row
+    for row, including when the file is read as several scan splits."""
+    wire_path, _ = wire
+    want = _reader_rows(wire_path)
+    assert _native_rows(spark, wire_path) == want
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "512")  # a few lines per split
+    try:
+        assert read_wire(spark, wire_path).rdd.getNumPartitions() > 1
+        assert _native_rows(spark, wire_path) == want
+    finally:
+        spark.conf.set(key, prior)
+
+
+def test_run_ingest_rerun_matches_fresh_run(spark, wire, tmp_path):
+    """A second run into the same dest and workdir after the wire grew
+    writes exactly what one fresh run over the full wire writes: the
+    staging is rewritten whole, no cursor is carried."""
+    wire_path, _ = wire
+    kw = dict(
+        entities=["account", "transfer"], stop_block=3000,
+        bundle_size=1000, chain_id="chain-rerun",
+    )
+    dest = str(tmp_path / "again")
+    run_ingest(spark, dest, wire_path=wire_path, **kw)
+    with open(wire_path, "a") as fh:
+        for b, i in ((2600, "z1"), (2700, "z2")):
+            fh.write(json.dumps({"entity_change": {"entity": "Account", "id": i,
+                                                   "operation": 2, "fields": []},
+                                 "block_num": b}) + "\n")
+    run_ingest(spark, dest, wire_path=wire_path, **kw)
+    fresh = str(tmp_path / "fresh")
+    run_ingest(spark, fresh, wire_path=wire_path, **kw)
+
+    def outputs(root):
+        out = {}
+        for sub in ("account", "transfer", "poi2$"):
+            for f in sorted(os.listdir(os.path.join(root, sub))):
+                with open(os.path.join(root, sub, f), "rb") as fh:
+                    out[f"{sub}/{f}"] = fh.read()
+        with open(os.path.join(root, "last_block.txt"), "rb") as fh:
+            out["last_block.txt"] = fh.read()
+        return out
+
+    got, want = outputs(dest), outputs(fresh)
+    assert got == want
+    assert want["last_block.txt"] == b"2700:\n"
+    assert b'"id": "z2"' in want["account/0000002000-0000002999.jsonl"]
 
 
 def _raw_df(spark, rows):

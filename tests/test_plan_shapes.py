@@ -487,3 +487,45 @@ def test_scan_catalog_memoizes_per_session(spark, sf_dir):
     c = q._t(spark, sf_dir, "lineitem")
     assert c is not a
     assert c.schema == a.schema
+
+
+def _holds_python_rdd(df) -> bool:
+    """True when any plan of ``df`` scans a driver-pickled RDD (what
+    ``createDataFrame(list)`` builds, and what starts Python workers)."""
+    plans = df._jdf.queryExecution().toString()
+    return "ExistingRDD" in plans or "LogicalRDD" in plans
+
+
+def test_bundle_header_rows_are_a_jvm_range(spark):
+    """write_bundled_lines' header frame is a spark.range, not a driver
+    list: one header row per expected bundle, no pickled RDD."""
+    from substreams_sink_graph_load_spark.operators.bundles import (
+        boundaries,
+        header_rows,
+    )
+
+    df = header_rows(spark, "id,block_range", 1500, 4200, 1000)
+    assert not _holds_python_rdd(df)
+    assert [(r["bundle_start"], r["line"]) for r in df.collect()] == [
+        (s, "id,block_range") for s, _ in boundaries(1500, 4200, 1000)
+    ]
+
+
+def test_poi_chain_returns_local_relation(spark):
+    """poi_chain's digest rows come back as an Arrow-built LocalRelation,
+    not a pickled RDD; the empty chain keeps its schema."""
+    from test_poi_spark import EVENTS
+
+    from substreams_sink_graph_load_spark.operators.poi import poi_chain
+
+    raw = spark.createDataFrame(EVENTS, "block_num long, seq long, value string")
+    df = poi_chain(spark, raw, chain_id="c")
+    assert not _holds_python_rdd(df)
+    assert "LocalRelation" in df._jdf.queryExecution().analyzed().toString()
+    assert df.count() == 3
+    empty = poi_chain(spark, raw.limit(0), chain_id="c")
+    assert not _holds_python_rdd(empty)
+    assert empty.schema.simpleString() == (
+        "struct<block_num:bigint,id:string,digest:string>"
+    )
+    assert empty.count() == 0

@@ -295,3 +295,42 @@ def test_extract_index_cli_live(pg_dsn, tmp_path, monkeypatch):
     ddl = (tmp_path / "create_indexes.ddl").read_text()
     assert "xpair_token0_idx" in ddl and ddl.strip().endswith(";")
     assert "noise" not in ddl
+
+
+def test_inject_csv_cli_starts_no_spark(pg_dsn, tmp_path, monkeypatch):
+    """CLI inject-csv COPYs through the driver-side connection pool and
+    never builds a Spark session: no ``spark`` fixture here, and the CLI's
+    session factory is made to fail if anything calls it."""
+    import contextlib
+    import io
+
+    import substreams_sink_graph_load_spark.cli as cli
+
+    def no_spark():
+        raise AssertionError("inject-csv must not start Spark")
+
+    monkeypatch.setattr(cli, "_spark", no_spark)
+    sdl = tmp_path / "pair.graphql"
+    sdl.write_text("type Pair @entity {\n  id: ID!\n  token: String\n}\n")
+    desc = parse_schema_file(str(sdl))["pair"]
+    run_sql(pg_dsn, 'CREATE SCHEMA IF NOT EXISTS "sgd78"')
+    run_sql(pg_dsn, create_table_ddl(desc, "sgd78"))
+    d = tmp_path / "csv" / "pair"
+    d.mkdir(parents=True)
+    for i, (lo, hi) in enumerate(((0, 999), (1000, 1999), (2000, 2999))):
+        (d / f"{lo:010d}-{hi:010d}.csv").write_text(
+            f'id,block_range,token\np{i},"[{lo + 1},)",t{i}\n'
+            f'q{i},"[{lo + 2},{lo + 5})",NULL\n'
+        )
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        rc = cli.main([
+            "inject-csv", "sgd78", str(tmp_path / "csv"), "pair", str(sdl),
+            pg_dsn, "0", "3000",
+        ])
+    assert rc == 0 and buf.getvalue().strip() == "injected 3 files"
+    assert run_sql(pg_dsn, 'SELECT count(*) FROM "sgd78"."pair"') == [("6",)]
+    rows = run_sql(
+        pg_dsn, 'SELECT id, lower(block_range) FROM "sgd78"."pair" ORDER BY id'
+    )
+    assert rows[0] == ("p0", "1") and rows[-1] == ("q2", "2002")
