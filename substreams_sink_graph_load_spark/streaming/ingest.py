@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 import shutil
 import urllib.parse
 
@@ -52,10 +53,17 @@ def read_wire(spark: SparkSession, wire_path: str) -> DataFrame:
     and a split's rows are contiguous there).  Both reads share the
     frame's file listing, so they plan the same splits and the bases
     apply to the frame returned.
+
+    ``wire_path`` must name one regular file: the split bases key on a
+    split's start offset alone, which only orders the lines of one file.
+    Glob characters in the name are escaped, so they match literally.
     """
     from ..sources.stream_source import _BLOCK_RE
 
-    lines = spark.read.text(wire_path, lineSep="\n").select(
+    if not os.path.isfile(wire_path):
+        raise ValueError(f"wire path is not a regular file: {wire_path!r}")
+    literal = re.sub(r"([\\*?\[\]{}])", r"\\\1", os.path.abspath(wire_path))
+    lines = spark.read.text(literal, lineSep="\n").select(
         F.input_file_block_start().alias("_split"),
         F.monotonically_increasing_id().alias("_row"),
         "value",

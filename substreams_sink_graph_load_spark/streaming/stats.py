@@ -9,12 +9,9 @@ at-a-glance heartbeat to ``run`` / ``tocsv`` so a terminal user sees
 liveness and rate without opening the UI.
 
 Driver-side only, zero cost to the job itself: a daemon thread samples
-(a) every active streaming query's ``recentProgress`` (deduplicated by
-``(runId, batchId)``, so cumulative event counts are exact as long as the
-poll interval outpaces ~100 batches) and (b) the status tracker's
-active-stage task counts for batch jobs.  A batch stage that counts its
-own rows (``run``'s wire staging, via ``DataFrame.observe``) reports them
-with :meth:`ProgressReporter.record_batch`.
+the status tracker's active-stage task counts.  A stage that counts its
+own rows (``run``'s wire staging, via ``DataFrame.observe``) reports
+them with :meth:`ProgressReporter.record_batch`.
 """
 
 from __future__ import annotations
@@ -47,11 +44,6 @@ class ProgressReporter:
         self._out = out if out is not None else sys.stderr
         self._halt = threading.Event()
         self._t0 = time.monotonic()
-        self._seen: set[tuple[str, int]] = set()
-        # handles outlive streams.active (a finished query drops off the
-        # active list but its recentProgress stays readable) — remember
-        # every query we ever saw so stop() counts the tail batches
-        self._queries: dict[str, object] = {}
         self._events = 0
         self._batches = 0
         self._thread = threading.Thread(
@@ -59,35 +51,10 @@ class ProgressReporter:
         )
 
     # -- sampling ----------------------------------------------------------
-    def attach(self, query) -> None:
-        """Track a query explicitly (exact counts even if it finishes
-        between polls)."""
-        self._queries[query.id] = query
-
     def record_batch(self, rows: int) -> None:
-        """Count one batch of ``rows`` events processed outside any
-        streaming query."""
+        """Count one batch of ``rows`` events."""
         self._events += int(rows)
         self._batches += 1
-
-    def _sample_streams(self) -> None:
-        try:
-            for q in self._spark.streams.active:
-                self._queries[q.id] = q
-        except Exception:
-            pass
-        for q in list(self._queries.values()):
-            try:
-                progresses = q.recentProgress
-            except Exception:
-                continue
-            for p in progresses:
-                key = (p["runId"], int(p["batchId"]))
-                if key in self._seen:
-                    continue
-                self._seen.add(key)
-                self._events += int(p.get("numInputRows", 0) or 0)
-                self._batches += 1
 
     def _sample_stages(self) -> str:
         try:
@@ -112,7 +79,6 @@ class ProgressReporter:
 
     def _run(self) -> None:
         while not self._halt.wait(self._interval):
-            self._sample_streams()
             print(self._line(), file=self._out, flush=True)
 
     # -- lifecycle ---------------------------------------------------------
@@ -125,7 +91,6 @@ class ProgressReporter:
         ``last_block=``) append to the line."""
         self._halt.set()
         self._thread.join(timeout=self._interval + 5)
-        self._sample_streams()
         extras = "".join(f" {k}={v}" for k, v in final.items())
         elapsed = time.monotonic() - self._t0
         rate = self._events / elapsed if elapsed > 0 else 0.0

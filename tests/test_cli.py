@@ -196,46 +196,26 @@ def test_create_index_rejects_non_ddl(tmp_path):
 
 def test_progress_reporter_heartbeat_and_summary(spark, tmp_path):
     """The 15s-cadence stats line (ref sinker/stats.go parity, interval
-    shrunk for the test): heartbeat lines while a streaming query runs,
-    cumulative event counts deduplicated by (runId, batchId), and a final
-    summary with caller extras."""
+    shrunk for the test): heartbeat lines while a job runs, cumulative
+    event and batch counts from record_batch, and a final summary with
+    caller extras."""
     import io as _io
-    import json as _json
     import time as _time
 
     from substreams_sink_graph_load_spark.streaming.stats import (
         ProgressReporter,
     )
 
-    src = tmp_path / "ev"
-    src.mkdir()
-    for i in range(3):
-        p = src / f"p{i}.jsonl"
-        with open(p, "w") as fh:
-            for j in range(5):
-                fh.write(_json.dumps({"user_id": i * 5 + j}) + "\n")
-        os.utime(p, (_time.time() + i, _time.time() + i))
-    stream = (
-        spark.readStream.format("json")
-        .schema("user_id long")
-        .option("maxFilesPerTrigger", 1)
-        .load(str(src))
-    )
     out = _io.StringIO()
     rep = ProgressReporter(spark, "run", interval_s=0.2, out=out).start()
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("stats_probe")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    for i in range(3):
+        rows = spark.range(i * 5, i * 5 + 5).collect()
+        rep.record_batch(len(rows))
     _time.sleep(0.5)  # at least one heartbeat after the last batch
     rep.stop(bundles=3, last_block=999)
     text = out.getvalue()
     assert "[run] +" in text  # heartbeat line(s) printed while running
     final = text.strip().splitlines()[-1]
     assert "done in" in final and "bundles=3" in final and "last_block=999" in final
-    # all 15 input rows counted exactly once across the 3 batches
-    assert "events=15" in final
+    # all 15 rows counted exactly once across the 3 batches
+    assert "events=15" in final and "batches=3" in final

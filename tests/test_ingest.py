@@ -236,11 +236,32 @@ def test_stream_reader_junk_line_fallback(spark, tmp_path):
         '{"entity_change": {}, "block_num": 7}\n'
         '{"entity_change": {}, "block_num": 8}'  # no trailing newline
     )
+    from substreams_sink_graph_load_spark.sources.stream_source import (
+        EntityChangesStreamReader,
+    )
+
+    r = EntityChangesStreamReader({"path": str(wire)})
+    assert r.latestOffset() == {"line": 6}
     rows = _reader_rows(wire)
     assert [(b, s) for b, s, _v in rows] == [
         (5, 0), (6, 1), (-1, 2), (7, 4), (8, 5)
     ]
     assert _native_rows(spark, wire) == rows
+
+
+def test_read_wire_takes_one_regular_file(spark, tmp_path):
+    """read_wire refuses a directory (its line numbering orders the lines
+    of one file only) and reads a file whose name holds glob characters
+    as that file, not as a pattern."""
+    (tmp_path / "w1.jsonl").write_text('{"block_num": 1}\n')
+    with pytest.raises(ValueError, match="not a regular file"):
+        read_wire(spark, str(tmp_path))
+    with pytest.raises(ValueError, match="not a regular file"):
+        read_wire(spark, str(tmp_path / "w*.jsonl"))
+    odd = tmp_path / "w[1]{a,b}?.jsonl"
+    odd.write_text('{"block_num": 2}\n{"block_num": 3}\n')
+    assert _native_rows(spark, odd) == _reader_rows(odd)
+    assert [b for b, _s, _v in _native_rows(spark, odd)] == [2, 3]
 
 
 def test_native_staging_matches_stream_reader(spark, wire):
