@@ -1,9 +1,10 @@
 """Run-stage throughput: one wire file staged by the JVM-native batch read
 (``streaming.ingest.read_wire``: text scan, line-number ``seq``, regex
 ``block_num``) -> staged parquet log -> final-blocks order check ->
-single-pass demux to bundled JSONL -> POI digest chain + CSVs +
-last_block marker.  The ``run`` analogue of scripts/throughput_tocsv.py,
-on the same lineitem-derived fixture, so the two numbers are comparable.
+single-pass demux to bundled JSONL, side by side with the POI digest
+chain and its driver-written ``poi2$`` CSVs -> last_block marker.  The
+``run`` analogue of scripts/throughput_tocsv.py, on the same
+lineitem-derived fixture, so the two numbers are comparable.
 
 Usage: python scripts/throughput_run.py [sf_dir]   (default sf0.1 ~1.8M events)
 """

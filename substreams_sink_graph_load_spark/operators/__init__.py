@@ -5,6 +5,7 @@ from .pg_csv import (
     pg_array,
     pg_block_range,
     csv_quote,
+    csv_quote_str,
     csv_header,
     render_entity_csv,
 )
@@ -19,7 +20,7 @@ from .dedup import (
     simhash_sketch,
 )
 from .multimodal import attach_binary, extract_features, sample_frames
-from .poi import poi_block_states, poi_chain, poi_entity_versions, poi_tocsv
+from .poi import poi_block_states, poi_chain, poi_tocsv
 from .skew import salted_agg, salted_join
 from .graph import pagerank_ppm
 
@@ -38,6 +39,7 @@ __all__ = [
     "pg_array",
     "pg_block_range",
     "csv_quote",
+    "csv_quote_str",
     "csv_header",
     "render_entity_csv",
     "validate_changes",
@@ -56,7 +58,6 @@ __all__ = [
     "sample_frames",
     "poi_block_states",
     "poi_chain",
-    "poi_entity_versions",
     "poi_tocsv",
     "salted_agg",
     "pagerank_ppm",

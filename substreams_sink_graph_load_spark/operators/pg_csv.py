@@ -21,6 +21,8 @@ we render int arrays correctly.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -34,7 +36,8 @@ def strip_nul(col: Column) -> Column:
 
 def bytea_hex(col: Column) -> Column:
     """BinaryType -> Postgres hex bytea literal ``\\xdeadbeef``."""
-    return F.concat(F.lit("\\x"), F.lower(F.hex(col)))
+    # not lower(): Spark 4's lower initialises ICU case mapping on first use
+    return F.concat(F.lit("\\x"), F.translate(F.hex(col), "ABCDEF", "abcdef"))
 
 
 def _escape_array_elem(col: Column) -> Column:
@@ -85,6 +88,19 @@ def csv_quote(col: Column) -> Column:
     )
     quoted = F.concat(F.lit('"'), F.regexp_replace(col, '"', '""'), F.lit('"'))
     return F.when(col == "", col).when(needs, quoted).otherwise(col)
+
+
+_GO_LEADING_SPACE = re.compile(_GO_WHITESPACE_CLASS)
+
+
+def csv_quote_str(field: str) -> str:
+    """:func:`csv_quote` for one driver-side string, same bytes."""
+    if field and (
+        field == r"\." or any(c in field for c in '",\n\r')
+        or _GO_LEADING_SPACE.match(field)
+    ):
+        return '"' + field.replace('"', '""') + '"'
+    return field
 
 
 def _null_default(f: Field) -> str | None:

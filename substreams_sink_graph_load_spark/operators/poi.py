@@ -14,6 +14,11 @@ RemoveEntity; entity and field names stay UN-normalized for hashing.
 A ``poi2$`` row is emitted only when the digest changes
 (sinker.go:260-269); empty blocks keep the digest fixed because the mixer
 constant I is the monoid identity.
+
+The ``run`` stage's ``poi2$`` bundles (:func:`poi_tocsv`) are written by
+the driver straight from the chain it already folded there — at most one
+row per block, no Spark job.  :func:`poi_chain_distributed` stays the
+cluster-scale chain for logs whose block count outgrows the driver.
 """
 
 from __future__ import annotations
@@ -22,7 +27,7 @@ import json
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..stablehash.core import FastHasher
@@ -425,6 +430,36 @@ def poi_block_states_sorted(
     return out
 
 
+def _digest_chain(
+    raw: DataFrame,
+    start_poi: bytes | None,
+    assume_sorted: bool,
+    runs: list[tuple[int, int, int, int]] | None,
+) -> tuple[list[int], list[str]]:
+    """The suppressed digest chain on the driver: the blocks whose digest
+    differs from the previous block's, ascending, and those digests in
+    hex.  The per-block state fold and its fallback are
+    :func:`poi_chain`'s (see there for ``assume_sorted`` and ``runs``)."""
+    states: list[tuple[int, bytes]] | None = None
+    if assume_sorted:
+        sorted_states = poi_block_states_sorted(raw, runs=runs)
+        if sorted_states is not None:
+            states = [(b, st) for b, st, _ in sorted_states]
+    if states is None:
+        states = [
+            (r["block_num"], bytes(r["state"]))
+            for r in poi_block_states(raw).collect()
+        ]
+    blocks, digests = [], []
+    prev = start_poi
+    for block, digest in chain_block_states(states, start=start_poi):
+        if digest != prev:
+            blocks.append(block)
+            digests.append(digest.hex())
+        prev = digest
+    return blocks, digests
+
+
 def poi_chain(
     spark: SparkSession,
     raw: DataFrame,
@@ -452,26 +487,9 @@ def poi_chain(
 
     Returns (block_num long, id string, digest string hex).
     """
-    states: list[tuple[int, bytes]] | None = None
-    if assume_sorted:
-        sorted_states = poi_block_states_sorted(raw, runs=runs)
-        if sorted_states is not None:
-            states = [(b, st) for b, st, _ in sorted_states]
-    if states is None:
-        states = [
-            (r["block_num"], bytes(r["state"]))
-            for r in poi_block_states(raw).collect()
-        ]
     import pyarrow as pa
 
-    chained = chain_block_states(states, start=start_poi)
-    blocks, digests = [], []
-    prev = start_poi
-    for block, digest in chained:
-        if digest != prev:
-            blocks.append(block)
-            digests.append(digest.hex())
-        prev = digest
+    blocks, digests = _digest_chain(raw, start_poi, assume_sorted, runs)
     # an Arrow table becomes a LocalRelation: no pickled RDD, no worker
     return spark.createDataFrame(
         pa.table({
@@ -582,46 +600,6 @@ def poi_chain_distributed(
     )
 
 
-def poi_entity_versions(chain: DataFrame) -> DataFrame:
-    """``poi2$`` entity rows from the digest chain: each digest change is an
-    UPDATE at its block, so version i spans ``[block_i, block_{i+1})`` and
-    the newest digest stays open (the reference routes poi2$ through the
-    same bundler/tocsv pipeline as any mutable entity; sinker.go:255-269 +
-    schema/entities.go:108-124 poi2$ = {id: chain-id, digest: Bytes}).
-    """
-    w = Window.partitionBy("id").orderBy("block_num")
-    return chain.select(
-        "id",
-        F.col("block_num").alias("block_range_start"),
-        F.lead("block_num").over(w).alias("block_range_end"),
-        "digest",
-    )
-
-
-def render_poi_csv(versions: DataFrame, bundle_size: int) -> DataFrame:
-    """CSV rows for the poi2$ table: ``id,block_range,digest`` with the
-    digest as a Postgres hex bytea literal (the chain already carries hex).
-    Rows route to the bundle of their *closing* block, open rows to their
-    start block — same rule as every mutable entity."""
-    from .bundles import bundle_start_col
-    from .pg_csv import csv_quote, pg_block_range
-
-    rng = pg_block_range(F.col("block_range_start"), F.col("block_range_end"))
-    line = F.concat_ws(
-        ",",
-        csv_quote(F.col("id")),
-        csv_quote(rng),
-        csv_quote(F.concat(F.lit("\\x"), F.col("digest"))),
-    )
-    emit = F.coalesce(F.col("block_range_end"), F.col("block_range_start"))
-    return versions.select(
-        line.alias("line"),
-        bundle_start_col(emit, bundle_size).alias("bundle_start"),
-        emit.alias("_order_block"),
-        F.col("block_range_start").alias("_order_seq"),
-    )
-
-
 def poi_tocsv(
     spark: SparkSession,
     raw: DataFrame,
@@ -642,26 +620,41 @@ def poi_tocsv(
     the sinker start block: bundle enumeration begins at its aligned bundle
     like the reference's bundlers.  ``assume_sorted`` enables the
     shuffle-free fold for physically seq-sorted logs (validated, with
-    automatic fallback)."""
+    automatic fallback).
+
+    The chain is already on the driver, so the files are written there, in
+    the bytes of the generic mutable-entity path the reference routes
+    ``poi2$`` through (sinker.go:255-269; ``render_entity_csv`` with
+    ``{id: ID!, digest: Bytes!}``, then ``write_bundled_csv``): each digest
+    change is an UPDATE at its block, so version i spans
+    ``[block_i, block_{i+1})`` and the newest stays open; a version goes to
+    the bundle of its closing block (an open one to its start block's),
+    ordered by (closing block, start); every bundle of ``boundaries`` gets
+    the header, and a version whose bundle is outside them is not written.
+    ``spark`` is unused.
+    """
     import os
 
-    from .bundles import write_bundled_csv
+    from .bundles import boundaries, bundle_filename
+    from .pg_csv import csv_quote_str
 
-    chain = poi_chain(
-        spark, raw, chain_id, start_poi=start_poi,
-        assume_sorted=assume_sorted, runs=runs,
-    )
-    versions = poi_entity_versions(chain)
-    rendered = render_poi_csv(versions, bundle_size)
+    blocks, digests = _digest_chain(raw, start_poi, assume_sorted, runs)
+    bounds = boundaries(first_block, stop_block, bundle_size)
+    rows: dict[int, list[tuple[int, int, str]]] = {s: [] for s, _ in bounds}
+    for start, end, digest in zip(blocks, blocks[1:] + [None], digests):
+        emit = start if end is None else end
+        bundle = rows.get(emit - emit % bundle_size)
+        if bundle is not None:
+            rng = f"[{start},{'' if end is None else end})"
+            fields = (chain_id, rng, "\\x" + digest)
+            bundle.append((emit, start, ",".join(map(csv_quote_str, fields))))
     dest = os.path.join(dest_dir, "poi2$")
     os.makedirs(dest, exist_ok=True)
-    return write_bundled_csv(
-        spark,
-        rendered,
-        dest,
-        header="id,block_range,digest",
-        first_block=first_block,
-        stop_block=stop_block,
-        bundle_size=bundle_size,
-        order_cols=["_order_block", "_order_seq"],
-    )
+    written = []
+    for s, e in bounds:
+        lines = ["id,block_range,digest"] + [ln for *_, ln in sorted(rows[s])]
+        target = os.path.join(dest, bundle_filename(s, e))
+        with open(target, "w", encoding="utf-8", newline="") as fh:
+            fh.write("\n".join(lines) + "\n")
+        written.append(target)
+    return written

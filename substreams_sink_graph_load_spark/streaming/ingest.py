@@ -11,13 +11,20 @@ whole on every run — a re-run over a grown wire equals a fresh run, so no
 cursor checkpoint is kept.  No Python process starts for staging; the
 Python streaming source (``sources.stream_source``) is the reference
 :func:`read_wire` is tested against and the seam where a live source
-plugs in.  The bundle files are then cut in one batch job — entity
+plugs in.
+
+Then, in order: the final-blocks order check (derived from the POI
+fold's run discovery when it can be), and only once it has passed, demux
+‖ POI — two independent reads of the staged log, demux on one extra
+driver thread while the caller's thread folds the POI chain and writes
+``poi2$``.  Demux cuts the bundle files in one batch job — entity
 routing is ONE repartition on (entity, bundle_start) feeding a single
 two-level ``partitionBy`` text write (every entity x bundle lands in its
-own directory in one pass; no per-entity rescans), POI is the §2.5
-parallel fold.  The reference materializes bundles as the stream crosses
-boundaries; the observable contract (file set, names, contents, order,
-empty bundles, poi2$ rows, last_block marker) is identical.
+own directory in one pass; no per-entity rescans); POI is the §2.5
+parallel fold.  ``last_block.txt`` is written after both have finished.
+The reference materializes bundles as the stream crosses boundaries; the
+observable contract (file set, names, contents, order, empty bundles,
+poi2$ rows, last_block marker) is identical.
 """
 
 from __future__ import annotations
@@ -27,6 +34,7 @@ import os
 import re
 import shutil
 import urllib.parse
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -442,7 +450,10 @@ def run_ingest(
     The wire stages with :func:`read_wire` into ``<workdir>/wire_log``
     (default workdir ``<dest>/_work_ingest``), replacing any earlier
     staging: a re-run over a grown wire writes what a fresh run would.
-    ``progress`` is told of the staged rows as one batch.
+    ``progress`` is told of the staged rows as one batch.  No bundle is
+    written before the order check passes; with a ``chain_id``, demux and
+    the ``poi2$`` write then run side by side (see the module docstring),
+    and an error from either propagates.
 
     ``enforce_order`` reproduces the reference's source contract: block
     numbers must be non-decreasing in cursor order — an undo/reorg signal
@@ -479,29 +490,48 @@ def run_ingest(
     # earlier run's bundles, so drop them HERE, deliberately and
     # documented — demux_jsonl itself treats any out-of-range row as a
     # hard error rather than silently discarding it with its staging dir.
-    files = demux_jsonl(
-        spark,
-        staged.where(F.col("block_num") >= first_block),
-        dest_dir, entities, stop_block, bundle_size,
-        first_block=first_block,
+    demux_args = (
+        spark, staged.where(F.col("block_num") >= first_block),
+        dest_dir, entities, stop_block, bundle_size, first_block,
     )
-
-    if chain_id is not None:
+    if chain_id is None:
+        files = demux_jsonl(*demux_args)
+    else:
         from ..operators.poi import RUNS_UNAVAILABLE, poi_tocsv
 
-        # The staged log is written in cursor order (one split per file,
-        # each in line order), so the shuffle-free POI fold applies; it validates the
-        # assumption and falls back to the shuffle path on any mismatch.
-        # Discovery ALWAYS ran above when chain_id is set, so runs=None
-        # here means it exceeded its bound — tell the fold so it goes
-        # straight to the shuffle path instead of re-scanning to rediscover
-        # the same overflow.
-        files["poi2$"] = poi_tocsv(
-            spark, staged, dest_dir, chain_id, stop_block,
-            bundle_size=bundle_size, start_poi=start_poi,
-            first_block=first_block, assume_sorted=True,
-            runs=runs if runs is not None else RUNS_UNAVAILABLE,
-        )
+        # Demux and the POI fold read the staged log independently, so
+        # demux runs on one more driver thread while this one folds.
+        # discover_runs and poi_block_states_sorted scope
+        # spark.sql.files.maxPartitionBytes through the session conf
+        # both threads share, so demux may plan its scan under the
+        # fold's value.  No output can change: demux's files do not
+        # depend on its input splits (one repartition on entity and
+        # bundle, rows sorted within it), only this thread sets the
+        # value, and the fold validates its own two passes' run sets
+        # against each other, falling back to the shuffle path on any
+        # drift.
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            demuxed = pool.submit(demux_jsonl, *demux_args)
+            try:
+                # The staged log is written in cursor order (one split
+                # per file, each in line order), so the shuffle-free POI
+                # fold applies; it validates the assumption and falls
+                # back to the shuffle path on any mismatch.  Discovery
+                # ALWAYS ran above when chain_id is set, so runs=None
+                # here means it exceeded its bound — tell the fold so it
+                # goes straight to the shuffle path instead of
+                # re-scanning to rediscover the same overflow.
+                poi_files = poi_tocsv(
+                    spark, staged, dest_dir, chain_id, stop_block,
+                    bundle_size=bundle_size, start_poi=start_poi,
+                    first_block=first_block, assume_sorted=True,
+                    runs=runs if runs is not None else RUNS_UNAVAILABLE,
+                )
+            finally:
+                # joins the demux; its error, if any, propagates (with a
+                # POI error as its context)
+                files = demuxed.result()
+        files["poi2$"] = poi_files
 
     # the order check already computed the global max; only re-scan when
     # it was skipped (enforce_order=False)

@@ -139,11 +139,16 @@ def test_run_ingest_rejects_out_of_order(spark, tmp_path):
             fh.write(json.dumps({"entity_change": {"entity": "Account", "id": "x",
                                                    "operation": 2, "fields": []},
                                  "block_num": block}) + "\n")
+    out = tmp_path / "out"
     with pytest.raises(ValueError, match="high-water mark"):
         run_ingest(
-            spark, str(tmp_path / "out"), entities=["account"],
+            spark, str(out), entities=["account"],
             stop_block=1000, wire_path=str(wire), bundle_size=1000,
+            chain_id="chain-x",
         )
+    # demux and the poi2$ write start only after the check has passed
+    assert not list(out.rglob("*.jsonl"))
+    assert not list(out.rglob("poi2$*"))
 
 
 def test_unseen_entity_materializes_empty_bundles(spark, wire, tmp_path):
@@ -300,20 +305,49 @@ def test_run_ingest_rerun_matches_fresh_run(spark, wire, tmp_path):
     fresh = str(tmp_path / "fresh")
     run_ingest(spark, fresh, wire_path=wire_path, **kw)
 
-    def outputs(root):
-        out = {}
-        for sub in ("account", "transfer", "poi2$"):
-            for f in sorted(os.listdir(os.path.join(root, sub))):
-                with open(os.path.join(root, sub, f), "rb") as fh:
-                    out[f"{sub}/{f}"] = fh.read()
-        with open(os.path.join(root, "last_block.txt"), "rb") as fh:
-            out["last_block.txt"] = fh.read()
-        return out
-
-    got, want = outputs(dest), outputs(fresh)
+    got, want = _outputs(dest), _outputs(fresh)
     assert got == want
     assert want["last_block.txt"] == b"2700:\n"
     assert b'"id": "z2"' in want["account/0000002000-0000002999.jsonl"]
+
+
+def test_run_ingest_small_splits_match_default(spark, wire, tmp_path):
+    """Demux plans its scan while the POI fold scopes
+    spark.sql.files.maxPartitionBytes on the shared session conf: a run
+    at a tiny caller value (many staged files, many demux splits) writes
+    exactly what a run at the default writes, and the caller's value is
+    restored."""
+    wire_path, _ = wire
+    kw = dict(
+        entities=["account", "transfer"], stop_block=3000,
+        bundle_size=1000, chain_id="chain-splits",
+    )
+    default = str(tmp_path / "default")
+    run_ingest(spark, default, wire_path=wire_path, **kw)
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "512")
+    small = str(tmp_path / "small")
+    try:
+        run_ingest(spark, small, wire_path=wire_path, **kw)
+        assert spark.conf.get(key) == "512"
+    finally:
+        spark.conf.set(key, prior)
+    staged = os.listdir(os.path.join(small, "_work_ingest", "wire_log"))
+    assert sum(f.startswith("part-") for f in staged) > 1
+    assert _outputs(small) == _outputs(default)
+
+
+def _outputs(root):
+    """Every JSONL and poi2$ bundle and last_block.txt of a run, by path."""
+    out = {}
+    for sub in ("account", "transfer", "poi2$"):
+        for f in sorted(os.listdir(os.path.join(root, sub))):
+            with open(os.path.join(root, sub, f), "rb") as fh:
+                out[f"{sub}/{f}"] = fh.read()
+    with open(os.path.join(root, "last_block.txt"), "rb") as fh:
+        out["last_block.txt"] = fh.read()
+    return out
 
 
 def _raw_df(spark, rows):

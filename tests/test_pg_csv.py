@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from substreams_sink_graph_load_spark.operators import (
     bytea_hex,
     csv_quote,
+    csv_quote_str,
     pg_array,
     pg_block_range,
     render_entity_csv,
@@ -37,11 +38,18 @@ def test_array_escaping(spark):
 
 
 def test_csv_quote(spark):
-    assert one(spark, csv_quote(F.lit("a,b"))) == '"a,b"'
-    assert one(spark, csv_quote(F.lit('say "hi"'))) == '"say ""hi"""'
-    assert one(spark, csv_quote(F.lit("plain"))) == "plain"
-    assert one(spark, csv_quote(F.lit(""))) == ""
-    assert one(spark, csv_quote(F.lit(" lead"))) == '" lead"'
+    for field, want in (
+        ("a,b", '"a,b"'),
+        ('say "hi"', '"say ""hi"""'),
+        ("plain", "plain"),
+        ("", ""),
+        (" lead", '" lead"'),
+        ("\\.", '"\\."'),
+        ("a\rb", '"a\rb"'),
+        ("a\nb", '"a\nb"'),
+    ):
+        assert one(spark, csv_quote(F.lit(field))) == want
+        assert csv_quote_str(field) == want  # the driver-side twin
 
 
 SDL = """
@@ -87,8 +95,10 @@ def test_csv_quote_unicode_whitespace(spark):
     ASCII \\s): NBSP / LINE SEPARATOR / IDEOGRAPHIC SPACE all quote."""
     for ch in (" ", " ", "　", " "):
         assert one(spark, csv_quote(F.lit(ch + "x"))) == '"' + ch + 'x"'
+        assert csv_quote_str(ch + "x") == '"' + ch + 'x"'
     # non-space leading unicode stays unquoted
     assert one(spark, csv_quote(F.lit("éx"))) == "éx"
+    assert csv_quote_str("éx") == "éx"
 
 
 def test_float_strict_mode(spark):

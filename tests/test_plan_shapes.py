@@ -529,3 +529,27 @@ def test_poi_chain_returns_local_relation(spark):
         "struct<block_num:bigint,id:string,digest:string>"
     )
     assert empty.count() == 0
+
+
+def test_bytea_render_uses_no_case_mapping(spark):
+    """render_entity_csv lowercases bytea hex (scalar and array) without
+    lower/upper: Spark 4's case mapping initialises ICU on its first use,
+    a one-time cost of seconds in every cold tocsv."""
+    from substreams_sink_graph_load_spark.operators.pg_csv import render_entity_csv
+    from substreams_sink_graph_load_spark.schema import parse_schema
+
+    desc = parse_schema(
+        "type Blob @entity {\n id: ID!\n payload: Bytes!\n parts: [Bytes!]\n}"
+    )["blob"]
+    df = spark.createDataFrame(
+        [("b1", 1, None, b"\xab\x0f", [b"\xcd", b"\xe1"])],
+        "id string, block_range_start long, block_range_end long,"
+        " payload binary, parts array<binary>",
+    )
+    out = render_entity_csv(df, desc)
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert "hex(" in plan
+    assert "lower(" not in plan and "upper(" not in plan
+    assert [r["line"] for r in out.collect()] == [
+        'b1,"[1,)","{\\xcd,\\xe1}",\\xab0f'
+    ]

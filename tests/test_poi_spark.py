@@ -3,6 +3,8 @@ digests as the reference's sequential per-block fold."""
 
 import json
 
+import pytest
+
 from substreams_sink_graph_load_spark.operators.poi import poi_block_states, poi_chain
 from substreams_sink_graph_load_spark.stablehash.core import FastHasher, fldmix_combine, _I
 from substreams_sink_graph_load_spark.stablehash.poi import ProofOfIndexing
@@ -119,6 +121,112 @@ def test_poi_tocsv_bundles(spark, tmp_path):
     assert b1[1] == f'chain-1,"[3,7)",\\x{expected[1][1].hex()}'
     assert b1[2] == f'chain-1,"[7,)",\\x{expected[2][1].hex()}'
     assert len(b0) == 2 and len(b1) == 3
+
+
+# events in blocks on both sides of first_block=1500 and of bundle edges,
+# up to the last bundle an unaligned stop_block=3700 truncates
+WIDE_EVENTS = [
+    (b, i, _line(b, "Account", f"id{i % 3}", 1 + i % 2, [("n", {"Bigint": str(i)})]))
+    for i, b in enumerate((5, 120, 120, 980, 1100, 1499, 1500, 1720, 2050, 2999, 3000, 3650))
+]
+
+
+def _generic_poi2_files(spark, chain, dest, first_block, stop_block, bundle_size):
+    """The generic mutable-entity route for ``poi2$`` (the reference's):
+    chain rows -> SCD-2 versions -> ``render_entity_csv`` with the
+    ``{id: ID!, digest: Bytes!}`` desc -> ``write_bundled_csv``."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from substreams_sink_graph_load_spark.operators.bundles import (
+        bundle_start_col,
+        write_bundled_csv,
+    )
+    from substreams_sink_graph_load_spark.operators.pg_csv import (
+        csv_header,
+        render_entity_csv,
+    )
+    from substreams_sink_graph_load_spark.schema.entities import (
+        EntityDesc,
+        Field,
+        FieldType,
+    )
+
+    desc = EntityDesc(
+        name="poi2$",
+        fields={
+            "id": Field("id", FieldType.ID, nullable=False),
+            "digest": Field("digest", FieldType.BYTES, nullable=False),
+        },
+    )
+    w = Window.partitionBy("id").orderBy("block_num")
+    versions = spark.createDataFrame(
+        chain, "block_num long, id string, digest string"
+    ).select(
+        "id",
+        F.col("block_num").alias("block_range_start"),
+        F.lead("block_num").over(w).alias("block_range_end"),
+        F.unhex("digest").alias("digest"),
+    )
+    emit = F.coalesce("block_range_end", "block_range_start")
+    rendered = render_entity_csv(
+        versions.withColumn("bundle_start", bundle_start_col(emit, bundle_size))
+        .withColumn("_order_block", emit)
+        .withColumn("_order_seq", F.col("block_range_start")),
+        desc,
+    )
+    return write_bundled_csv(
+        spark, rendered, dest, header=csv_header(desc),
+        first_block=first_block, stop_block=stop_block,
+        bundle_size=bundle_size, order_cols=["_order_block", "_order_seq"],
+    )
+
+
+@pytest.mark.parametrize(
+    "chain_id,first_block,stop_block,events",
+    [
+        ("a,b", 0, 4000, WIDE_EVENTS),
+        (" lead", 1500, 3700, WIDE_EVENTS),
+        ('q"t', 1500, 3700, WIDE_EVENTS),
+        ("empty", 1500, 3700, []),
+    ],
+)
+def test_poi_tocsv_matches_generic_entity_path(
+    spark, tmp_path, chain_id, first_block, stop_block, events
+):
+    """poi_tocsv's driver-written poi2$ bundles are byte-equal to the
+    generic mutable-entity path over the same chain: quoting of the chain
+    id, rows whose bundle lies below the first bundle dropped, the
+    truncated last bundle, header-only files for an empty chain."""
+    import os
+
+    from substreams_sink_graph_load_spark.operators.poi import poi_tocsv
+
+    raw = spark.createDataFrame(events, "block_num long, seq long, value string")
+    got = poi_tocsv(
+        spark, raw, str(tmp_path / "driver"), chain_id, stop_block,
+        bundle_size=1000, first_block=first_block,
+    )
+    chain = [tuple(r) for r in poi_chain(spark, raw, chain_id).collect()]
+    want = _generic_poi2_files(
+        spark, chain, str(tmp_path / "generic"), first_block, stop_block, 1000
+    )
+    assert [os.path.basename(f) for f in got] == [
+        os.path.basename(f) for f in want
+    ]
+    for g, w in zip(got, want):
+        with open(g, "rb") as fh_g, open(w, "rb") as fh_w:
+            assert fh_g.read() == fh_w.read(), os.path.basename(g)
+    data_rows = 0
+    for f in got:
+        with open(f, "rb") as fh:
+            data_rows += fh.read().count(b"\n") - 1  # less the header
+    if not events:
+        assert data_rows == 0
+    elif first_block == 0:
+        assert data_rows == len(chain)
+    else:  # versions closed below bundle 1000 are not written
+        assert 0 < data_rows < len(chain)
 
 
 def test_batched_fold_matches_scalar_reference():
